@@ -31,16 +31,17 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
-    // SPARK_GRAFT_PLANDUMP_EXEC=1: EXECUTE the query (noop sink) first
-    // and dump the AQE-FINAL executed plan instead of the initial one —
-    // the evidence mode for claims AQE decides at runtime (stage reuse,
-    // join rewrites, coalescing).
+    // SPARK_GRAFT_PLANDUMP_EXEC=1: EXECUTE the query first and dump the
+    // AQE-FINAL executed plan (isFinalPlan=true) instead of the initial
+    // one — the evidence mode for claims AQE decides at runtime (stage
+    // reuse, join rewrites, coalescing). It runs df's OWN QueryExecution:
+    // a sink write would plan and finalize a separate one.
     val exec = sys.env.get("SPARK_GRAFT_PLANDUMP_EXEC").isDefined
     for (n <- names; fn <- SparkEntry.queries.get(n)) {
       try {
         val df = fn(spark, dir)
         val p = if (exec) {
-          df.write.format("noop").mode("overwrite").save()
+          df.queryExecution.toRdd.foreach(_ => ())
           df.queryExecution.executedPlan.toString
         } else df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         java.nio.file.Files.writeString(java.nio.file.Paths.get(out, s"$n.txt"), p)

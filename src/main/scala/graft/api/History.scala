@@ -189,7 +189,10 @@ object History {
       s.smoothing match {
         case Some("sma") =>
           val n = s.smoothingParam.map(_.toInt).getOrElse(10)
-          df.withColumn(s.columnName, smaOver(col(s.columnName), n))
+          // quoted: a SignalK path's dots are part of the column name,
+          // not nested-field access
+          df.withColumn(s.columnName,
+            smaOver(col(s"`${s.columnName.replace("`", "``")}`"), n))
         case Some("ema") => df // applied below, all ema specs in one pass
         case None => df
         case Some(other) =>

@@ -577,7 +577,7 @@ object Embeddings {
           |    'ccos', round((graft_dot(v, c.vc) / (sqrt(norm2) * sqrt(c.cnorm2))) * 1e6, 0) / 1e6,
           |    'cid', c.cid)),
           |  named_struct('ccos', cast(-10.0 as double), 'cid', cast(-1 as bigint)),
-          |  (acc, s) -> if(s.ccos > acc.ccos, s, acc))""".stripMargin))
+          |  (acc, s) -> if(NOT isnan(s.ccos) AND s.ccos > acc.ccos, s, acc))""".stripMargin))
       .select(col("vec_id"), col("v"), col("best.cid").as("cid"),
         col("best.ccos").as("ccos"))
   }

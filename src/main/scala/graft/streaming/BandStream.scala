@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,8 +22,9 @@ import org.apache.spark.sql.streaming.Trigger
   * the `streamLastTimestamps` idea), unioned into each batch as a
   * carry-in row that sorts strictly first (ts = −1 against real epoch
   * timestamps) and is decisive AT the carried state; the batch then
-  * reruns the batch operator's window core and appends its transitions
-  * to a result store before the atomic state swap. Carried state makes
+  * reruns the batch operator's window core; its transitions append to
+  * the result table and the new state replaces the state table in one
+  * [[ManifestStore]] publish. Carried state makes
   * trigger-at-a-time ≡ one-shot (the carry row reproduces exactly the
   * prefix's last-non-null), so the drained transition log is
   * bit-identical to the batch operator and the 16b oracle carries
@@ -44,17 +46,9 @@ object BandStream {
     val sch = ev.schema
     val srcDir = Slices.stage(ev, "band", 3)
     val base = java.nio.file.Files.createTempDirectory("graft_band_store").toString
-    val stateStore = base + "/state"; val transStore = base + "/trans"
-    ev.limit(0).select(col("user_id"), col("event_id").as("cur_state"))
-      .write.parquet(stateStore)
-    ev.limit(0).select(col("user_id"), col("ts_ms"),
-      lit("").as("transition"), col("value"))
-      .write.parquet(transStore)
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-    }
+    val stateSchema = ev.select(col("user_id"), lit(0).as("cur_state")).schema
+    val transSchema = ev.select(col("user_id"), col("ts_ms"),
+      lit("").as("transition"), col("value")).schema
     val q = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(srcDir)
@@ -64,7 +58,7 @@ object BandStream {
         // carry-in: one pseudo-row per known user, sorting strictly
         // first (ts −1 < any epoch ts) and decisive AT the carried
         // state — the batch's first real row lags against it
-        val carry = sp.read.parquet(stateStore)
+        val carry = ManifestStore.readTable(sp, base, "state", stateSchema)
           .select(col("user_id"), lit(-1L).as("ts_ms"), lit(-1L).as("event_id"),
             lit(null).cast("double").as("value"), col("cur_state").as("decisive"))
         val u = batch.localCheckpoint()
@@ -83,15 +77,13 @@ object BandStream {
           .select(col("user_id"), col("ts_ms"),
             when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
             col("value"))
-        trans.coalesce(1).write.mode("append").parquet(transStore)
         // new per-user state = the last row's running state
         val newState = st
           .groupBy("user_id")
           .agg(max_by(col("state"), struct(col("ts_ms"), col("event_id"))).as("cur_state"))
-        val sTmp = stateStore + "_next"
-        newState.coalesce(1).write.mode("overwrite").parquet(sTmp)
-        swap(sTmp, stateStore)
-        ()
+        ManifestStore.publishOps(sp, base, Seq(
+          ManifestStore.appendOp("trans", "", () => Nil, () => trans),
+          ManifestStore.replaceTableOp("state", "", () => newState)))
       }
       .option("checkpointLocation", {
         val d = java.nio.file.Files.createTempDirectory("graft_ckpt_band")
@@ -100,7 +92,7 @@ object BandStream {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(transStore)
+    ManifestStore.readTable(spark, base, "trans", transSchema)
       .orderBy("user_id", "ts_ms")
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Funnel
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,8 +21,8 @@ import org.apache.spark.sql.streaming.Trigger
   * purchase — ≤ 3 rows per converting user): a non-chosen event can
   * never become a stage minimum later, so carrying only the chosen
   * rows is lossless, and each trigger simply reruns the batch
-  * operator's chained-window core over state ∪ batch. Store swaps
-  * atomically per trigger (tier-maintenance discipline); the final
+  * operator's chained-window core over state ∪ batch, and commits the
+  * new state by [[ManifestStore]] publish per trigger; the final
   * drain reuses the BATCH oracle verbatim. At 100 TB/day the state is
   * ≤ 3 rows per user — user-count-bounded like the
   * [[MarkovStream]] carry-in, never throughput-bounded.
@@ -34,9 +35,7 @@ object FunnelStream {
       .where(col("event_type").isin("view", "click", "purchase"))
       .select("user_id", "event_type", "ts_ms", "value")
     val srcDir = Slices.stage(ev, "funnel", 3)
-    val store = java.nio.file.Files.createTempDirectory("graft_funnel_store").toString + "/state"
-    ev.limit(0).write.parquet(store)
-    val fs = graft.util.Fs.of(spark, store)
+    val base = java.nio.file.Files.createTempDirectory("graft_funnel_store").toString
     def staged(u: DataFrame): DataFrame = {
       val w = Window.partitionBy("user_id")
       u.withColumn("t1", min(when(col("event_type") === "view", col("ts_ms"))).over(w))
@@ -51,7 +50,8 @@ object FunnelStream {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
-        val st = staged(sp.read.parquet(store).unionByName(batch.localCheckpoint()))
+        val st = staged(ManifestStore.readTable(sp, base, "state", ev.schema)
+          .unionByName(batch.localCheckpoint()))
         // keep only the argmin event rows — the lossless funnel state
         val next = st.where(
             (col("event_type") === "view" && col("ts_ms") === col("t1")) ||
@@ -60,12 +60,7 @@ object FunnelStream {
             (col("event_type") === "purchase" && col("value") > 150.0 &&
               col("ts_ms") === col("t3")))
           .select("user_id", "event_type", "ts_ms", "value")
-        val tmp = store + "_next"
-        next.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store))
-        ()
+        ManifestStore.publishOps(sp, base, Seq(ManifestStore.replaceTableOp("state", "", () => next)))
       }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_ckpt_funnel").toString)
@@ -73,7 +68,7 @@ object FunnelStream {
       .start()
     q.awaitTermination()
     // drain: the batch operator's roll-up over the argmin state rows
-    val perUser = staged(spark.read.parquet(store))
+    val perUser = staged(ManifestStore.readTable(spark, base, "state", ev.schema))
       .groupBy("user_id")
       .agg(min("t1").as("t1"), min("t2").as("t2"), min("t3").as("t3"))
     perUser.agg(

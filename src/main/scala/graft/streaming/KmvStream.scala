@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.KmvOverlap
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -21,8 +22,8 @@ import org.apache.spark.sql.streaming.Trigger
   * trigger-at-a-time maintenance is bit-equal to the one-shot batch
   * sketch over the concatenated slices, and the BATCH oracle carries
   * over verbatim. The store is S rows × ≤ k longs, independent of
-  * throughput; the raw stream is never retained. Store swaps are
-  * atomic per trigger (the tier-maintenance discipline).
+  * throughput; the raw stream is never retained. Each trigger commits
+  * the merged sketches by [[ManifestStore]] publish.
   */
 object KmvStream {
 
@@ -39,12 +40,7 @@ object KmvStream {
     docs.repartitionByRange(3, col("doc_id"))
       .write.mode("overwrite").parquet(srcDir)
     val base = java.nio.file.Files.createTempDirectory("graft_kmv_store").toString
-    val store = base + "/sketches"
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-    }
+    val sketchSchema = KmvOverlap.sketches(docs).schema
     val q = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(srcDir)
@@ -54,27 +50,21 @@ object KmvStream {
         graft.functions.NGrams.register(sp)
         graft.functions.PolyHash.register(sp)
         graft.functions.KmvSketch.register(sp)
-        val delta = KmvOverlap.sketches(batch)
-        val merged =
-          if (fs.exists(new org.apache.hadoop.fs.Path(store)))
-            // union-and-resketch: explode both ≤k-long arrays and fold
-            // them back through graft_kmv — the bounded sketch union
-            sp.read.parquet(store).unionByName(delta)
-              .select(col("source"), explode(col("sk")).as("h"))
-              .groupBy("source")
-              .agg(expr(s"graft_kmv(h, ${KmvOverlap.K})").as("sk"))
-          else delta
-        val tmp = store + "_next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap(tmp, store)
-        ()
+        // union-and-resketch: explode both ≤k-long arrays and fold
+        // them back through graft_kmv — the bounded sketch union
+        ManifestStore.publishOps(sp, base, Seq(ManifestStore.replaceTableOp("sketches", "", () =>
+          ManifestStore.readTable(sp, base, "sketches", sketchSchema)
+            .unionByName(KmvOverlap.sketches(batch))
+            .select(col("source"), explode(col("sk")).as("h"))
+            .groupBy("source")
+            .agg(expr(s"graft_kmv(h, ${KmvOverlap.K})").as("sk")))))
       }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_ckpt_kmv").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    KmvOverlap.estimator(spark.read.parquet(store))
+    KmvOverlap.estimator(ManifestStore.readTable(spark, base, "sketches", sketchSchema))
   }
 
   // -------------------------------------------------------------- #109

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -19,24 +20,14 @@ import org.apache.spark.sql.streaming.Trigger
   * seam argument is one line: every window is a running last-non-null
   * and the carry IS its prefix value, so slice-at-a-time ≡ one-shot
   * and the batch oracles carry verbatim (LifecycleStreamSpec pins
-  * bit-equality for both). Stores are user-count-sized (×k watchers
-  * for the registry twin), swapped atomically per trigger; history is
-  * never rescanned.
+  * bit-equality for both). The carry and the transition log are two
+  * tables of one [[ManifestStore]] root, committed together by one
+  * publish per trigger; the carry is user-count-sized (×k watchers for
+  * the registry twin) and history is never rescanned.
   */
 object LifecycleStream {
 
   private val ckptRef = new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def swapFn(spark: SparkSession): (String, String) => Unit = {
-    // Resolve per swap FROM the destination path: a store rooted on
-    // s3a://… / hdfs://… swaps on its own filesystem, not the local one.
-    (tmp: String, dst: String) => {
-      val fs = graft.util.Fs.of(spark, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-      ()
-    }
-  }
 
   private def runSliced(spark: SparkSession, ev: DataFrame, tag: String)
       (onBatch: DataFrame => Unit): Unit = {
@@ -62,19 +53,15 @@ object LifecycleStream {
       .where(col("event_type").isin("error", "signup"))
       .select("user_id", "ts_ms", "event_id", "event_type", "value")
     val base = java.nio.file.Files.createTempDirectory("graft_lifecycle_store").toString
-    val carryStore = base + "/carry"; val transStore = base + "/trans"
-    Sessions.emptyLifecycleCarry(spark).write.parquet(carryStore)
-    ev.limit(0).select(col("user_id"), col("ts_ms"), lit("").as("transition"),
-      lit("").as("trigger"), col("value")).write.parquet(transStore)
-    val swap = swapFn(spark)
+    val carrySchema = Sessions.emptyLifecycleCarry(spark).schema
+    val transSchema = ev.select(col("user_id"), col("ts_ms"), lit("").as("transition"),
+      lit("").as("trigger"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
     runSliced(spark, ev, "lifecycle") { batch =>
       val sp = batch.sparkSession
-      val carry = sp.read.parquet(carryStore)
+      val carry = ManifestStore.readTable(sp, base, "carry", carrySchema)
       val ann = Sessions.lifecycleAnnotated(batch.localCheckpoint(), carry)
         .localCheckpoint()
-      Sessions.lifecycleTransitions(ann)
-        .coalesce(1).write.mode("append").parquet(transStore)
       // new carry: the batch's last running values where present,
       // the old carry where the user was silent this trigger
       val lastRow = ann.groupBy("user_id").agg(
@@ -90,11 +77,11 @@ object LifecycleStream {
           coalesce(col("n_enabled"), col("enabled0"), lit(0)).as("enabled0"),
           coalesce(col("n_last_val"), col("last_val0")).as("last_val0"),
           coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))
-      val tmp = carryStore + "_next"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      swap(tmp, carryStore)
+      ManifestStore.publishOps(sp, base, Seq(
+        ManifestStore.appendOp("trans", "", () => Nil, () => Sessions.lifecycleTransitions(ann)),
+        ManifestStore.replaceTableOp("carry", "", () => merged)))
     }
-    spark.read.parquet(transStore).orderBy("user_id", "ts_ms")
+    ManifestStore.readTable(spark, base, "trans", transSchema).orderBy("user_id", "ts_ms")
   }
 
   // --------------------------------------------------------------- #81
@@ -104,33 +91,31 @@ object LifecycleStream {
       .where(col("event_type") === "click")
       .select("user_id", "ts_ms", "event_id", "event_type", "value")
     val base = java.nio.file.Files.createTempDirectory("graft_multithr_store").toString
-    val carryStore = base + "/carry"; val transStore = base + "/trans"
-    Sessions.emptyWatcherCarry(spark).write.parquet(carryStore)
-    ev.limit(0).select(col("user_id"), lit("").as("watcher_id"), col("ts_ms"),
-      lit("").as("transition"), col("value")).write.parquet(transStore)
-    val swap = swapFn(spark)
+    val carrySchema = Sessions.emptyWatcherCarry(spark).schema
+    val transSchema = ev.select(col("user_id"), lit("").as("watcher_id"), col("ts_ms"),
+      lit("").as("transition"), col("value")).schema
     val ord = struct(col("ts_ms"), col("event_id"))
     runSliced(spark, ev, "multithr") { batch =>
       val sp = batch.sparkSession
-      val carry = sp.read.parquet(carryStore)
+      val carry = ManifestStore.readTable(sp, base, "carry", carrySchema)
       val ann = Sessions.multiThresholdAnnotated(batch.localCheckpoint(), carry)
         .localCheckpoint()
-      ann.where(col("state") =!= col("prev_state"))
+      val trans = ann.where(col("state") =!= col("prev_state"))
         .select(col("user_id"), col("watcher_id"), col("ts_ms"),
           when(col("state") === 1, "activated").otherwise("deactivated").as("transition"),
           col("value"))
-        .coalesce(1).write.mode("append").parquet(transStore)
       val lastRow = ann.groupBy("user_id", "watcher_id")
         .agg(max_by(col("state"), ord).as("n_state"))
       val merged = carry
         .join(lastRow, Seq("user_id", "watcher_id"), "full_outer")
         .select(col("user_id"), col("watcher_id"),
           coalesce(col("n_state"), col("state0"), lit(0)).as("state0"))
-      val tmp = carryStore + "_next"
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-      swap(tmp, carryStore)
+      ManifestStore.publishOps(sp, base, Seq(
+        ManifestStore.appendOp("trans", "", () => Nil, () => trans),
+        ManifestStore.replaceTableOp("carry", "", () => merged)))
     }
-    spark.read.parquet(transStore).orderBy("user_id", "watcher_id", "ts_ms")
+    ManifestStore.readTable(spark, base, "trans", transSchema)
+      .orderBy("user_id", "watcher_id", "ts_ms")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,8 +21,9 @@ import org.apache.spark.sql.streaming.Trigger
   * batch's own LAG window, plus an O(types²) transition-count store
   * the per-batch pair counts ADD into (integer adds — associative, so
   * trigger-at-a-time ≡ one-shot over the concatenated slices and the
-  * BATCH oracle carries over verbatim). Both stores swap atomically
-  * per trigger (the tier-maintenance discipline). At 100 TB/day the
+  * BATCH oracle carries over verbatim). Both are tables of one
+  * [[ManifestStore]] root, committed together by one publish per
+  * trigger. At 100 TB/day the
   * carry-in store is user-count-sized and the count store stays
   * types², independent of throughput — the corpus is never rescanned.
   *
@@ -42,23 +44,16 @@ object MarkovStream {
       .select("user_id", "ts_ms", "event_id", "event_type")
     val srcDir = Slices.stage(ev, "markov", 3)
     val base = java.nio.file.Files.createTempDirectory("graft_markov_store").toString
-    val lastStore = base + "/last"; val countStore = base + "/counts"
-    ev.limit(0).write.parquet(lastStore)
-    ev.limit(0).select(col("event_type").as("from_type"),
-      col("event_type").as("to_type"), col("event_id").as("n"))
-      .write.parquet(countStore)
-    val fs = graft.util.Fs.of(spark, base)
-    def swap(tmp: String, dst: String): Unit = {
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(dst))
-    }
+    val countSchema = ev.select(col("event_type").as("from_type"),
+      col("event_type").as("to_type"), col("event_id").as("n")).schema
     val q = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sp = batch.sparkSession
-        val carry = sp.read.parquet(lastStore)
+        val snap = ManifestStore.snapshot(sp, base)
+        val carry = snap.read("last", sch)
         // carry-in rows sort strictly first per user (slice time
         // ranges are disjoint), so their own lag stays null and the
         // batch's first event pairs with them — the cross-trigger seam
@@ -68,20 +63,17 @@ object MarkovStream {
           .where(col("from_type").isNotNull)
           .groupBy(col("from_type"), col("event_type").as("to_type"))
           .agg(count(lit(1)).as("n"))
-        val mergedCounts = sp.read.parquet(countStore)
+        val mergedCounts = snap.read("counts", countSchema)
           .unionByName(pairs)
           .groupBy("from_type", "to_type").agg(sum("n").as("n"))
-        val cTmp = countStore + "_next"
-        mergedCounts.coalesce(1).write.mode("overwrite").parquet(cTmp)
         val newLast = u
           .groupBy("user_id")
           .agg(max_by(struct(col("ts_ms"), col("event_id"), col("event_type")),
             struct(col("ts_ms"), col("event_id"))).as("m"))
           .select(col("user_id"), col("m.ts_ms"), col("m.event_id"), col("m.event_type"))
-        val lTmp = lastStore + "_next"
-        newLast.coalesce(1).write.mode("overwrite").parquet(lTmp)
-        swap(cTmp, countStore); swap(lTmp, lastStore)
-        ()
+        ManifestStore.publishOps(sp, base, Seq(
+          ManifestStore.replaceTableOp("counts", "", () => mergedCounts),
+          ManifestStore.replaceTableOp("last", "", () => newLast)))
       }
       .option("checkpointLocation", {
         val d = java.nio.file.Files.createTempDirectory("graft_ckpt_markov")
@@ -91,7 +83,7 @@ object MarkovStream {
       .start()
     q.awaitTermination()
     val perFrom = Window.partitionBy("from_type")
-    spark.read.parquet(countStore)
+    ManifestStore.readTable(spark, base, "counts", countSchema)
       .withColumn("p", graft.funcs.r6(col("n") / sum(col("n")).over(perFrom)))
       .orderBy("from_type", "to_type")
   }

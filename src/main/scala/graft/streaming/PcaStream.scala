@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.similarity.{Embeddings, Pca}
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Live PCA moment maintenance — the streaming twin of
   * [[Pca.embedPca]]: the fixed-size raw-moment buffer (Σxᵢ, Σxᵢxⱼ)
@@ -19,7 +21,8 @@ import org.apache.spark.sql.streaming.Trigger
   * Long ADD — exact scaled-integer sums are associative over ANY
   * slicing of the corpus, so trigger-at-a-time maintenance produces
   * the bit-identical buffer the one-shot aggregate computes and the
-  * BATCH oracle carries over verbatim. The store is ONE row of
+  * BATCH oracle carries over verbatim. Each trigger commits the row
+  * by [[ManifestStore]] publish. The store is ONE row of
   * d(d+3)/2+1 longs (~17 KB at d = 64) regardless of throughput; the
   * merge arithmetic runs on the driver inside foreachBatch because
   * the operands are metadata-sized by construction (the
@@ -44,20 +47,21 @@ object PcaStream {
     emb.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
     val base = java.nio.file.Files.createTempDirectory("graft_pca_store").toString
-    val store = base + "/moments"
-    maintainMoments(spark, srcDir, emb.schema, store)
-    val st = spark.read.parquet(store).head()
+    maintainMoments(spark, srcDir, emb.schema, base)
+    val st = ManifestStore.readTable(spark, base, "moments", momentSchema).head()
     // projection over the accumulated corpus with the STORE's moments
     val vecs = Embeddings.vecsOf(spark.read.parquet(srcDir))
       .select("vec_id", "label", "v")
     Pca.projectWith(vecs, st.getSeq[Long](0).toArray, st.getLong(1))
   }
 
-  /** Drain `srcDir` into the one-row moment store at `store` — the
-    * maintenance loop, shared with [[streamDriftReport]]. */
+  private val momentSchema = StructType(Seq(
+    StructField("m", ArrayType(LongType)), StructField("n", LongType)))
+
+  /** Drain `srcDir` into the one-row `moments` table of the store at
+    * `base` — the maintenance loop, shared with [[streamDriftReport]]. */
   private[graft] def maintainMoments(spark: SparkSession, srcDir: String,
-      schema: org.apache.spark.sql.types.StructType, store: String): Unit = {
-    val fs = graft.util.Fs.of(spark, store)
+      schema: StructType, base: String): Unit = {
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
       .parquet(srcDir)
@@ -70,10 +74,9 @@ object PcaStream {
           .agg(expr("graft_gram(v)").as("m"), count(lit(1)).as("n")).head()
         val delta = row.getSeq[Long](0).toArray
         val dn = row.getLong(1)
-        val p = new org.apache.hadoop.fs.Path(store)
-        val (m, n) =
-          if (fs.exists(p)) {
-            val prev = sp.read.parquet(store).head()
+        val (m, n) = ManifestStore.readTable(sp, base, "moments", momentSchema)
+            .collect().headOption match {
+          case Some(prev) =>
             val pm = prev.getSeq[Long](0).toArray
             require(pm(0) == delta(0), "stream_pca_moments: dimension drift")
             // metadata-sized exact merge: elementwise Long add (slot 0
@@ -84,14 +87,11 @@ object PcaStream {
               merged(i) = Math.addExact(merged(i), delta(i)); i += 1
             }
             (merged, prev.getLong(1) + dn)
-          } else (delta, dn)
+          case None => (delta, dn)
+        }
         import sp.implicits._
-        val tmp = store + "_next"
-        Seq((m.toSeq, n)).toDF("m", "n")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs.delete(p, true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-        ()
+        ManifestStore.publishOps(sp, base, Seq(ManifestStore.replaceTableOp("moments", "", () =>
+          Seq((m.toSeq, n)).toDF("m", "n"))))
       }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft_ckpt_pca").toString)
@@ -120,9 +120,9 @@ object PcaStream {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_drift_src").toString
     ref.repartitionByRange(3, col("vec_id"))
       .write.mode("overwrite").parquet(srcDir)
-    val store = java.nio.file.Files.createTempDirectory("graft_drift_store").toString + "/moments"
-    maintainMoments(spark, srcDir, ref.schema, store)
-    val st = spark.read.parquet(store).head()
+    val base = java.nio.file.Files.createTempDirectory("graft_drift_store").toString
+    maintainMoments(spark, srcDir, ref.schema, base)
+    val st = ManifestStore.readTable(spark, base, "moments", momentSchema).head()
     graft.similarity.DriftMonitor.reportFromMoments(
       spark, dir, 0.5, st.getSeq[Long](0).toArray, st.getLong(1))
   }

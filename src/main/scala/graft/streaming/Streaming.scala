@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.ManifestStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -405,50 +406,41 @@ object Streaming {
     * events roll into 5-min decimal partials and merge into the
     * persistent tier store via [[graft.operators.TimeSeries
     * .mergeTierPartials]] (touched buckets re-aggregate, untouched
-    * mass passes through a broadcast anti-join untouched; the store
-    * swap is atomic tmp+rename). Because the partials carry exact
-    * decimal sums, ANY batch boundary placement yields a final tier
-    * bit-identical to a full batch recompute — which is precisely what
-    * the oracle checks. The source is split into four files consumed
-    * one per trigger, so the merge path (not a single-batch shortcut)
-    * is what's exercised. */
+    * mass passes through a broadcast anti-join untouched; each trigger
+    * commits the rewritten tier as one [[ManifestStore]] publish).
+    * Because the partials carry exact decimal sums, ANY batch
+    * boundary placement yields a final tier bit-identical to a full
+    * batch recompute — which is precisely what the oracle checks. The
+    * source is split into four files consumed one per trigger, so the
+    * merge path (not a single-batch shortcut) is what's exercised. */
   def streamTierMaintenance(spark: SparkSession, dir: String): DataFrame = withNanos(spark) {
     import graft.operators.TimeSeries
     val srcDir = java.nio.file.Files.createTempDirectory("graft_tier_src").toString
-    val store = java.nio.file.Files.createTempDirectory("graft_tier_store").toString + "/tier5m"
+    val base = java.nio.file.Files.createTempDirectory("graft_tier_store").toString
     val sch = eventsSchema(spark, dir)
     spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
       .parquet(dir).repartition(4)
       .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, store)
+    def partials(events: DataFrame): DataFrame = TimeSeries.tierPartials(events, 300000L)
+      .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
+    val tierSchema = partials(withTsMs(spark.read.schema(sch).parquet(srcDir))).schema
     val q = withTsMs(spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(srcDir))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = TimeSeries.tierPartials(batch, 300000L)
-          .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-        val storePath = new org.apache.hadoop.fs.Path(store)
-        val merged =
-          if (fs.exists(storePath))
-            TimeSeries.mergeTierPartials(batch.sparkSession.read.parquet(store), delta)
-          else delta
-        val tmp = store + "_next"
-        // the tier is ~bucket-count sized (tiny next to raw); at demo
-        // scale one file per swap keeps the 4 rewrite cycles cheap —
-        // at warehouse scale drop the coalesce and let the store
-        // partition by (context, day) like the batch tiers
-        merged.withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-          .coalesce(2)
-          .write.mode("overwrite").parquet(tmp)
-        fs.delete(storePath, true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), storePath)
-        ()
+        val sp = batch.sparkSession
+        // the tier is ~bucket-count sized (tiny next to raw): one file
+        // per publish keeps the 4 rewrite cycles cheap — at warehouse
+        // scale partition the table by (context, day) like the batch tiers
+        ManifestStore.publishOps(sp, base, Seq(ManifestStore.replaceTableOp("tier5m", "", () =>
+          TimeSeries.mergeTierPartials(ManifestStore.readTable(sp, base, "tier5m", tierSchema),
+            partials(batch)))))
       }
       .option("checkpointLocation", tmpCheckpoint("tiermaint"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(store)
+    ManifestStore.readTable(spark, base, "tier5m", tierSchema)
       .withColumn("value_avg", col("value_sum").cast("double") / col("sample_count"))
       .select("user_id", "event_type", "bucket_ms", "value_avg", "value_min",
         "value_max", "sample_count", "first_ts_ms", "last_ts_ms")
@@ -509,7 +501,9 @@ object Streaming {
     * [[graft.operators.TimeSeries.mergeTierPartials]] discipline (the
     * untouched mass passes through an anti-join, never re-aggregated),
     * (b) APPENDS a CDC row per touched bucket — (old, corrected) as of
-    * that trigger — before atomically swapping the store. Because the
+    * that trigger. The tier and the CDC are two tables of ONE
+    * [[ManifestStore]] root, committed by ONE publish per trigger, so a
+    * CDC row never lands for a tier rewrite that did not. Because the
     * partials carry decimal sums, applying late batches one trigger at
     * a time is associatively identical to applying them all at once:
     * the final store ≡ a full rebuild, so the driver-facing output
@@ -521,9 +515,7 @@ object Streaming {
     import graft.operators.TimeSeries
     val srcDir = java.nio.file.Files.createTempDirectory("graft_corr_src").toString
     val base = java.nio.file.Files.createTempDirectory("graft_corr_store").toString
-    val pubDir = base + "/published"; val store = base + "/tier1h"
-    val cdcDir = base + "/cdc"
-    val keys = Seq("user_id", "event_type", "bucket_ms")
+    val pubDir = base + "/published"; val root = base + "/live"
     val isLate = col("event_id") % 17 === 3
     val sch = eventsSchema(spark, dir)
     val all = withTsMs(spark.read.option("pathGlobFilter", "events.parquet")
@@ -532,47 +524,17 @@ object Streaming {
     TimeSeries.tierPartials(all.where(!isLate), 3600000L)
       .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
       .coalesce(2).write.mode("overwrite").parquet(pubDir)
-    spark.read.parquet(pubDir).write.mode("overwrite").parquet(store)
+    ManifestStore.publishOps(spark, root, Seq(
+      ManifestStore.replaceTableOp("tier", "", () => spark.read.parquet(pubDir))))
     // late arrivals: hash-split into 3 files = 3 AvailableNow triggers
     all.where(isLate).drop("ts_ms")
       .repartition(3, pmod(col("event_id"), lit(3)))
       .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, store)
-    def avgCols(df: DataFrame, avg: String, n: String): DataFrame =
-      df.select(col("user_id"), col("event_type"), col("bucket_ms"),
-        (col("value_sum").cast("double") / col("sample_count")).as(avg),
-        col("sample_count").as(n))
     val q = withTsMs(spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(srcDir))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        // pinned: feeds the touched-key set and the merge
-        val delta = TimeSeries.tierPartials(batch, 3600000L)
-          .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
-          .localCheckpoint()
-        val touched = delta.select(keys.map(col): _*)
-        val cur = sp.read.parquet(store)
-        val tmp = store + "_next"
-        val (pass, reagg) = TimeSeries.mergeTierPartialParts(cur, delta)
-        // the CDC's new side IS the merge's reagg branch (the merged
-        // store semi-joined on touched keys selects exactly those
-        // rows: the pass branch is anti-joined on the same set), so
-        // the CDC append no longer re-reads the just-written store —
-        // and both jobs read only (cur, checkpointed delta), so the
-        // store rewrite and the CDC append run CONCURRENTLY
-        // (guide §2.6). Both complete before the swap, as before.
-        inParallel(
-          () => pass.unionByName(reagg)
-            .coalesce(2).write.mode("overwrite").parquet(tmp),
-          () => avgCols(reagg, "new_avg", "new_n")
-            .join(avgCols(cur.join(broadcast(touched), keys, "left_semi"),
-              "old_avg", "old_n"), keys, "left")
-            .write.mode("append").parquet(cdcDir))
-        fs.delete(new org.apache.hadoop.fs.Path(store), true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store))
-        ()
+        correctTier(batch.sparkSession, root, batch)
       }
       .option("checkpointLocation", tmpCheckpoint("tiercorr"))
       .trigger(Trigger.AvailableNow())
@@ -580,14 +542,50 @@ object Streaming {
     q.awaitTermination()
     // driver-facing output ≡ the one-shot batch answer: original
     // published vs final store over every bucket any trigger touched
-    val touchedAll = spark.read.parquet(cdcDir).select(keys.map(col): _*).distinct()
-    avgCols(spark.read.parquet(store).join(broadcast(touchedAll), keys, "left_semi"),
-        "new_avg", "new_n")
-      .join(avgCols(spark.read.parquet(pubDir).join(broadcast(touchedAll), keys, "left_semi"),
-        "old_avg", "old_n"), keys, "left")
+    val published = spark.read.parquet(pubDir)
+    val snap = ManifestStore.snapshot(spark, root)
+    val touchedAll = snap.read("cdc", StructType(tierKeys.map(published.schema(_))))
+      .distinct()
+    tierAvgCols(snap.read("tier", published.schema)
+        .join(broadcast(touchedAll), tierKeys, "left_semi"), "new_avg", "new_n")
+      .join(tierAvgCols(published.join(broadcast(touchedAll), tierKeys, "left_semi"),
+        "old_avg", "old_n"), tierKeys, "left")
       .select(col("user_id"), col("event_type"), col("bucket_ms"),
         col("old_avg"), col("old_n"), col("new_avg"), col("new_n"))
       .orderBy("user_id", "event_type", "bucket_ms")
+  }
+
+  private val tierKeys = Seq("user_id", "event_type", "bucket_ms")
+
+  private def tierAvgCols(df: DataFrame, avg: String, n: String): DataFrame =
+    df.select(col("user_id"), col("event_type"), col("bucket_ms"),
+      (col("value_sum").cast("double") / col("sample_count")).as(avg),
+      col("sample_count").as(n))
+
+  /** One tier-correction trigger: merge the batch's 1 h partials into
+    * the `tier` table of the store at `root` and append the touched
+    * buckets' (old, corrected) rows to its `cdc` table — both in ONE
+    * publish, so a crash anywhere leaves both tables at the previous
+    * version and a re-run applies the batch once. The CDC's new side
+    * IS the merge's reagg branch (the pass branch is anti-joined on
+    * the same touched set), so it never re-reads the just-written
+    * tier, and the publish runs the two table writes concurrently. */
+  private[graft] def correctTier(sp: SparkSession, root: String, batch: DataFrame): Unit = {
+    import graft.operators.TimeSeries
+    // pinned: feeds the touched-key set and the merge
+    val delta = TimeSeries.tierPartials(batch, 3600000L)
+      .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
+      .localCheckpoint()
+    val touched = delta.select(tierKeys.map(col): _*)
+    // forced inside the publish, i.e. under the store lease
+    lazy val cur = ManifestStore.readTable(sp, root, "tier", delta.schema)
+    lazy val (pass, reagg) = TimeSeries.mergeTierPartialParts(cur, delta)
+    ManifestStore.publishOps(sp, root, Seq(
+      ManifestStore.replaceTableOp("tier", "", () => pass.unionByName(reagg)),
+      ManifestStore.appendOp("cdc", "", () => Nil, () =>
+        tierAvgCols(reagg, "new_avg", "new_n")
+          .join(tierAvgCols(cur.join(broadcast(touched), tierKeys, "left_semi"),
+            "old_avg", "old_n"), tierKeys, "left"))))
   }
 
   // ------------------------------------------------------------- #42h
@@ -696,14 +694,16 @@ object Streaming {
   /** LIVE SKETCH MAINTENANCE: the HLL register store (graft.operators
     * .Hll) kept current by a stream — each micro-batch reduces to its
     * own ≤ m-row register partial, max-merges into the persisted
-    * store, and atomically swaps it (the tier-maintenance pattern
-    * applied to a sketch). Because max is associative/commutative and
-    * the register pipeline is integer-exact, trigger-at-a-time
+    * store, and commits it by [[ManifestStore]] publish (the
+    * tier-maintenance pattern applied to a sketch). Because max is
+    * associative/commutative and the register pipeline is
+    * integer-exact, trigger-at-a-time
     * maintenance is INDISTINGUISHABLE from a full batch rebuild — the
     * final estimate reuses `sketch_hll_distinct`'s oracle verbatim.
     * The exact-count accuracy column is maintained the same way: a
-    * persisted distinct (event_type, user_id) store unioned per batch
-    * (the state dropDuplicates would hold, made visible).
+    * persisted distinct (event_type, user_id) table unioned per batch
+    * (the state dropDuplicates would hold, made visible), committed in
+    * the same publish as the registers.
     *
     * At 100 TB/day this is THE distinct-counting shape: the raw
     * stream is never retained, the store is m rows per group, and
@@ -752,55 +752,38 @@ object Streaming {
     import graft.operators.Hll
     val srcDir = java.nio.file.Files.createTempDirectory("graft_hll_src").toString
     val base = java.nio.file.Files.createTempDirectory("graft_hll_store").toString
-    val regStore = base + "/regs"
-    val exactStore = base + "/pairs"
     val sch = eventsSchema(spark, dir)
     spark.read.option("pathGlobFilter", "events.parquet").schema(sch)
       .parquet(dir).repartition(4)
       .write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, base)
-    def swapIn(df: DataFrame, path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_next")
-      df.coalesce(2).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
-    }
+    def pairsOf(events: DataFrame): DataFrame =
+      events.select(col("event_type"), col("user_id"))
+    val pairs0 = pairsOf(spark.read.schema(sch).parquet(srcDir))
+    val (pairSchema, regSchema) = (pairs0.schema, Hll.registers(pairs0).schema)
     val q = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val ev = batch.select(col("event_type"), col("user_id"))
-        // register store and exact-pair store are independent: their
-        // read-merge-write jobs overlap instead of serializing
-        inParallel(
-          () => {
-            val regDelta = Hll.registers(ev)
-            val regMerged =
-              if (fs.exists(new org.apache.hadoop.fs.Path(regStore)))
-                s.read.parquet(regStore).unionByName(regDelta)
-                  .groupBy("event_type", "idx").agg(max("mj").as("mj"))
-              else regDelta
-            swapIn(regMerged, regStore)
-          },
-          () => {
-            val pairDelta = ev.distinct()
-            val pairMerged =
-              if (fs.exists(new org.apache.hadoop.fs.Path(exactStore)))
-                s.read.parquet(exactStore).unionByName(pairDelta).distinct()
-              else pairDelta
-            swapIn(pairMerged, exactStore)
-          })
-        ()
+        val sp = batch.sparkSession
+        val ev = pairsOf(batch)
+        lazy val snap = ManifestStore.snapshot(sp, base)
+        // registers and exact pairs commit together; the publish runs
+        // their read-merge-write jobs concurrently
+        ManifestStore.publishOps(sp, base, Seq(
+          ManifestStore.replaceTableOp("regs", "", () =>
+            snap.read("regs", regSchema).unionByName(Hll.registers(ev))
+              .groupBy("event_type", "idx").agg(max("mj").as("mj"))),
+          ManifestStore.replaceTableOp("pairs", "", () =>
+            snap.read("pairs", pairSchema).unionByName(ev).distinct())))
       }
       .option("checkpointLocation", tmpCheckpoint("streamhll"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val exact = spark.read.parquet(exactStore).groupBy("event_type")
+    val snap = ManifestStore.snapshot(spark, base)
+    val exact = snap.read("pairs", pairSchema).groupBy("event_type")
       .agg(countDistinct(col("user_id")).as("exact_distinct"))
-    Hll.estimateRegisters(spark.read.parquet(regStore))
+    Hll.estimateRegisters(snap.read("regs", regSchema))
       .join(exact, "event_type")
       .select("event_type", "n_hit", "s_scaled", "hll_estimate", "exact_distinct")
       .orderBy("event_type")
@@ -811,7 +794,8 @@ object Streaming {
     * (registers merge by max; counters merge by +): each micro-batch
     * of documents reduces to its own gram-count delta, its counter
     * delta ADDS cell-wise into the persisted ≤ d·w-row sketch, and
-    * the gram-count store sums in parallel (the exact top-k side).
+    * the gram-count table sums in the same publish (the exact top-k
+    * side).
     * Addition is associative/commutative and batches partition the
     * corpus, so trigger-at-a-time ≡ the one-shot sketch and the batch
     * oracle carries over verbatim. The production read: frequency
@@ -823,67 +807,39 @@ object Streaming {
     graft.functions.NGrams.register(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("graft_cms_src").toString
     val base = java.nio.file.Files.createTempDirectory("graft_cms_store").toString
-    val cntStore = base + "/counters"
-    val gramStore = base + "/grams"
     val docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
     val sch = docs.schema
     docs.repartition(4).write.mode("overwrite").parquet(srcDir)
-    val fs = graft.util.Fs.of(spark, base)
-    def swapIn(df: DataFrame, path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val tmp = new org.apache.hadoop.fs.Path(path + "_next")
-      df.coalesce(2).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(p, true)
-      fs.rename(tmp, p)
-    }
-    def mergeAdd(store: String, delta: DataFrame, keys: Seq[String], cnt: String): Unit = {
-      val s = delta.sparkSession
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(store)))
-          s.read.parquet(store).unionByName(delta)
-            .groupBy(keys.map(col): _*).agg(sum(cnt).as(cnt))
-        else delta
-      swapIn(merged, store)
-    }
+    def counterDelta(counts: DataFrame): DataFrame =
+      Cms.hashed(counts).groupBy("salt", "idx").agg(sum("n").as("c"))
+    val (gramSchema, cntSchema) =
+      (Cms.gramCounts(docs).schema, counterDelta(Cms.gramCounts(docs)).schema)
+    def addOp(snap: => ManifestStore.Snapshot, table: String, schema: StructType,
+        delta: DataFrame, keys: Seq[String], cnt: String): ManifestStore.TableOp =
+      ManifestStore.replaceTableOp(table, "", () =>
+        snap.read(table, schema).unionByName(delta)
+          .groupBy(keys.map(col): _*).agg(sum(cnt).as(cnt)))
     val q = spark.readStream.schema(sch)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        val sp = batch.sparkSession
         val counts = Cms.gramCounts(batch).localCheckpoint()
-        // the two stores are independent (both read only the
-        // checkpointed batch delta + their own table): their
-        // read-merge-write jobs overlap instead of serializing
-        inParallel(
-          () => mergeAdd(gramStore, counts, Seq("gram"), "n"),
-          () => mergeAdd(cntStore,
-            Cms.hashed(counts).groupBy("salt", "idx").agg(sum("n").as("c")),
-            Seq("salt", "idx"), "c"))
-        ()
+        lazy val snap = ManifestStore.snapshot(sp, base)
+        // both tables read only the checkpointed batch delta + their
+        // own committed rows: the publish runs the two read-merge-write
+        // jobs concurrently and commits them together
+        ManifestStore.publishOps(sp, base, Seq(
+          addOp(snap, "grams", gramSchema, counts, Seq("gram"), "n"),
+          addOp(snap, "counters", cntSchema, counterDelta(counts), Seq("salt", "idx"), "c")))
       }
       .option("checkpointLocation", tmpCheckpoint("streamcms"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    Cms.probeTopK(spark.read.parquet(gramStore), spark.read.parquet(cntStore))
+    val snap = ManifestStore.snapshot(spark, base)
+    Cms.probeTopK(snap.read("grams", gramSchema), snap.read("counters", cntSchema))
   }
-
-  /** Run independent per-trigger store writes CONCURRENTLY (guide
-    * §2.6: actions are only sequential because driver code calls them
-    * sequentially; a later job's tasks back-fill executors freed by
-    * the earlier job's tail). Every task runs to completion before the
-    * trigger returns — a failure in any rethrows after all finish, so
-    * no write can straggle past its trigger. The same move
-    * ManifestStore.publishOps applies to multi-table publishes,
-    * extended to the two pre-manifest sketch stores. */
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs = tasks.map(t => Future(scala.util.Try(t())))
-      Await.result(Future.sequence(fs), scala.concurrent.duration.Duration.Inf)
-        .foreach(_.get)
-    }
 
   private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -194,11 +194,10 @@ object ManifestStore {
       dir => writePartitioned(data(), partCol, dir))
 
   /** The scheduled small-file sweep for one table, INCREMENTAL: only
-    * the HOT dirs — more than `maxFiles` committed files, or a file
-    * count the index predates (legacy lines) — are read and collapsed
-    * to one `sortCols`-sorted file each; an already-compact dir is not
-    * read, not rewritten, and its shard + index line carry forward
-    * verbatim. The hot set is decided UNDER the publish lease from the
+    * the HOT dirs — more than `maxFiles` committed files — are read and
+    * collapsed to one `sortCols`-sorted file each; an already-compact
+    * dir is not read, not rewritten, and its shard + index line carry
+    * forward verbatim. The hot set is decided UNDER the publish lease from the
     * manifest's per-dir file counts alone (O(index buckets) metadata
     * reads, zero data reads), so the sweep's cost tracks the
     * small-file PROBLEM — O(touched) — never the store size. A fully
@@ -221,8 +220,7 @@ object ManifestStore {
         val fs = Fs.of(spark, root)
         val v = committedVersion(fs, root)
         indexIx(fs, root, v)
-          .filter(l => l.dk.startsWith(prefix) &&
-            (l.n < 0 || l.n > maxFiles))
+          .filter(l => l.dk.startsWith(prefix) && l.n > maxFiles)
           .map(_.dk)
       }
       TableOp(table, partCol,
@@ -236,13 +234,21 @@ object ManifestStore {
             val files = hot.flatMap(dk =>
               dirShardOf(fs, root, m, dk).toSeq
                 .flatMap(s => shardFiles(fs, root, s)))
-            val hotRows = spark.read.option("basePath", dir).schema(schema)
-              .parquet(files.map(f => s"$root/$f"): _*)
+            val hotRows = literalParquet(spark, dir, schema, files.map(f => s"$root/$f"))
             writeLaidOut(hotRows.repartition(col(partCol))
               .sortWithinPartitions(sortCols.map(col): _*), partCol, dir)
           }
         })
     }
+
+  /** Read exactly the listed files (partition columns resolved against
+    * `base`). The paths are LITERAL: a store root holding a glob
+    * character (`[`, `{`, `*`) must not be expanded as a pattern. */
+  private def literalParquet(spark: SparkSession, base: String, schema: StructType,
+      files: Seq[String]): DataFrame =
+    spark.read.option("basePath", base)
+      .option(org.apache.spark.sql.execution.datasources.DataSource.GLOB_PATHS_KEY, "false")
+      .schema(schema).parquet(files: _*)
 
   private def writePartitioned(df: DataFrame, partCol: String, dir: String): Unit =
     writeLaidOut(
@@ -332,18 +338,16 @@ object ManifestStore {
   }
 
   /** One version's manifest file, parsed: the bucket count `r`, the
-    * store's dir count (−1 when the header predates the count field),
-    * and the (bucket → index-shard) lines. `r` == 0 marks a LEGACY
-    * single-level manifest whose lines are (dirKey → dir-shard)
-    * directly (its count is exact: the line count). */
+    * store's dir count, and the (bucket → index-shard) lines. `r` == 0
+    * only for [[EmptyManifest]] — no version. */
   private final case class ManifestIx(r: Int, count: Int,
-      buckets: Seq[(Int, String)], legacy: Seq[(String, String)]) {
-    def exists: Boolean = r > 0 || legacy.nonEmpty
+      buckets: Seq[(Int, String)]) {
+    def exists: Boolean = r > 0
     /** O(1) bucket → index-shard lookup (ADVICE r20: the per-(version,
       * dir) cleanup/GC paths called a linear collectFirst per lookup). */
     lazy val bucketMap: Map[Int, String] = buckets.toMap
   }
-  private val EmptyManifest = ManifestIx(0, 0, Seq.empty, Seq.empty)
+  private val EmptyManifest = ManifestIx(0, 0, Seq.empty)
 
   private def splitTab(l: String, mp: Path): (String, String) = {
     val i = l.indexOf('\t')
@@ -351,30 +355,45 @@ object ManifestStore {
     (l.substring(0, i), l.substring(i + 1))
   }
 
-  private def readManifest(fs: FileSystem, root: String, v: Int): ManifestIx = {
+  /** Version `v`'s manifest, or None when it does not parse as the
+    * current layout (`#R <buckets> <dirs>` header, then bucket lines). */
+  private def parseManifest(fs: FileSystem, root: String, v: Int): Option[ManifestIx] = {
     val mp = manifestPath(root, v)
-    if (v <= 0 || !fs.exists(mp)) EmptyManifest
-    else readLines(fs, mp) match {
-      case head +: rest if head.startsWith("#R\t") =>
-        val hf = head.split('\t')
-        ManifestIx(hf(1).toInt, if (hf.length > 2) hf(2).toInt else -1,
-          rest.map(l => { val (b, s) = splitTab(l, mp); (b.toInt, s) }), Seq.empty)
-      case lines => // legacy single-level manifest: readable, never written
-        ManifestIx(0, lines.size, Seq.empty, lines.map(splitTab(_, mp)))
+    if (v <= 0 || !fs.exists(mp)) Some(EmptyManifest)
+    else {
+      val lines = readLines(fs, mp)
+      lines.headOption.map(_.split('\t')) match {
+        case Some(Array("#R", r, n)) =>
+          try Some(ManifestIx(r.toInt, n.toInt,
+            lines.tail.map(l => { val (b, s) = splitTab(l, mp); (b.toInt, s) })))
+          catch { case _: IllegalArgumentException => None }
+        case _ => None
+      }
     }
   }
 
+  /** A COMMITTED version's manifest. Only the current layout is read:
+    * every staged store's fingerprint folds in [[LayoutVersion]] and
+    * every other store is created fresh, and a manifest is complete
+    * before its marker exists, so any other shape is foreign or
+    * corrupt — it fails loudly, never read, published over or swept as
+    * if it were empty. (An UNCOMMITTED manifest that does not parse is
+    * a publish killed between create and close: crash residue, which
+    * publish cleanup deletes and the sweep skips.) */
+  private def readManifest(fs: FileSystem, root: String, v: Int): ManifestIx =
+    parseManifest(fs, root, v).getOrElse(throw new IllegalStateException(
+      s"unknown manifest layout at ${manifestPath(root, v)} — restage the " +
+        s"store (this build reads layout version $LayoutVersion only)"))
+
   /** One parsed index-shard line: dir key, the dir's shard file, and
-    * (LayoutVersion ≥ 5) the dir's committed FILE COUNT — the metadata
-    * the incremental compactor selects its hot dirs by. `n` = −1 for
-    * lines written before the count field existed. */
+    * the dir's committed FILE COUNT — the metadata the incremental
+    * compactor selects its hot dirs by. */
   private[graft] final case class IxLine(dk: String, shard: String, n: Int)
 
   private def parseIx(l: String, mp: Path): IxLine = {
     val parts = l.split('\t')
-    require(parts.length >= 2, s"malformed index line at $mp: $l")
-    IxLine(parts(0), parts(1),
-      if (parts.length > 2) parts(2).toInt else -1)
+    require(parts.length == 3, s"malformed index line at $mp: $l")
+    IxLine(parts(0), parts(1), parts(2).toInt)
   }
 
   /** Parsed (dk → IxLine) map of one index shard, memoized per (root,
@@ -414,8 +433,7 @@ object ManifestStore {
     * versions) as absent. */
   private def dirShardOf(fs: FileSystem, root: String, m: ManifestIx,
       dk: String, lax: Boolean = false): Option[String] =
-    if (m.r == 0) m.legacy.collectFirst { case (k, s) if k == dk => s }
-    else m.bucketMap.get(bucketOf(dk, m.r)).flatMap { ix =>
+    m.bucketMap.get(bucketOf(dk, m.r)).flatMap { ix =>
       ixMapOf(fs, root, ix, lax).flatMap(_.get(dk)).map(_.shard)
     }
 
@@ -425,13 +443,10 @@ object ManifestStore {
     * [[dirShardOf]]. */
   private def indexIx(fs: FileSystem, root: String, v: Int): Seq[IxLine] = {
     val m = readManifest(fs, root, v)
-    if (m.r == 0) m.legacy.map { case (dk, s) => IxLine(dk, s, -1) }
-    else {
-      val fetched = fetchShards(fs, root, m.buckets.map(_._2))
-      m.buckets.flatMap { case (_, idxShard) =>
-        fetched(idxShard)
-          .map(parseIx(_, new Path(shardsDir(root), idxShard)))
-      }
+    val fetched = fetchShards(fs, root, m.buckets.map(_._2))
+    m.buckets.flatMap { case (_, idxShard) =>
+      fetched(idxShard)
+        .map(parseIx(_, new Path(shardsDir(root), idxShard)))
     }
   }
 
@@ -561,24 +576,28 @@ object ManifestStore {
     * split each shard; contents return to the driver exactly as the
     * serial path would produce them (the driver must hold the resolved
     * snapshot either way — this distributes the READS, not the list).
-    * Falls back to the pool when no session is active. */
+    * Each task opens its shards by exact path through the store's
+    * FileSystem: no joined path string, no glob expansion, no driver-
+    * side input listing, so a root holding `,` or `[` resolves like any
+    * other. Falls back to the pool when no session is active. */
   private def fetchShardsJob(fs: FileSystem, root: String,
       misses: Seq[String]): Option[Map[String, Seq[String]]] =
     SparkSession.getActiveSession.map { sp =>
       resolveJobRuns.incrementAndGet()
       // qualified against the STORE's filesystem, not the session default
       val paths = misses.map(s =>
-        fs.makeQualified(new Path(shardsDir(root), s)).toString)
+        s -> fs.makeQualified(new Path(shardsDir(root), s)).toString)
+      val conf = new org.apache.spark.util.SerializableConfiguration(fs.getConf)
       val minParts = math.min(misses.size,
         math.max(sp.sparkContext.defaultParallelism, 1))
-      val byPath = sp.sparkContext
-        .wholeTextFiles(paths.mkString(","), minParts)
+      val fetched = sp.sparkContext.parallelize(paths, minParts)
+        .mapPartitions(_.map { case (s, p) =>
+          val path = new Path(p)
+          s -> readLines(path.getFileSystem(conf.value), path)
+        })
         .collect()
       shardDiskReads.addAndGet(misses.size)
-      byPath.map { case (p, content) =>
-        val name = p.substring(p.lastIndexOf('/') + 1)
-        name -> content.linesIterator.map(_.trim).filter(_.nonEmpty).toList
-      }.toMap
+      fetched.toMap
     }
 
   /** Read many shards, fetching cache misses in parallel — on the
@@ -599,11 +618,8 @@ object ManifestStore {
           fetchShardsJob(fs, root, misses) else None
         viaJob match {
           case Some(m) =>
-            // a shard the job did not return is a real missing file —
-            // same loud failure the serial path raises
-            for (s <- misses if !m.contains(s))
-              throw new java.io.FileNotFoundException(
-                new Path(shardsDir(root), s).toString)
+            // a missing shard fails its task (and the job) loudly, as
+            // the serial path's strict read does
             m.foreach { case (s, ls) => c.put(s, ls) }
             m
           case None =>
@@ -655,8 +671,7 @@ object ManifestStore {
         spark.createDataFrame(new java.util.ArrayList[Row](), schema)
       else {
         val base = tableDir(root, table)
-        spark.read.option("basePath", base).schema(schema)
-          .parquet(fl.map(f => s"$base/$f"): _*)
+        literalParquet(spark, base, schema, fl.map(f => s"$base/$f"))
       }
     }
   }
@@ -809,9 +824,12 @@ object ManifestStore {
     try {
       // every manifest still on disk — committed, grace, or a crashed
       // publish's (its own cleanup belongs to the next publish, not
-      // this sweep) — protects the shards it references
+      // this sweep) — protects the shards it references; a crashed
+      // publish's manifest cut short mid-write protects nothing
       val live: Set[String] = manifestVersions(fs, root).flatMap { w =>
-        val m = readManifest(fs, root, w)
+        val m =
+          if (fs.exists(markerPath(root, w))) readManifest(fs, root, w)
+          else parseManifest(fs, root, w).getOrElse(EmptyManifest)
         val idx = m.buckets.map(_._2)
         idx ++ idx.flatMap(ix => shardLinesLax(fs, root, ix)
           .map(parseIx(_, new Path(shardsDir(root), ix)).shard))
@@ -910,12 +928,14 @@ object ManifestStore {
       // Markers whose manifest is gone (a fenced straggler's leftovers)
       // are dangling — readers already ignore them; delete them so the
       // version they squatted on publishes cleanly.
+      // A manifest cut short mid-write (writeLines is create, write,
+      // close) does not parse: it is deleted unread, and its own index
+      // shards are left to sweepStrandedShards.
       for (w <- allVs if !committedVs.contains(w)) {
-        val mw = readManifest(fs, root, w)
+        val mw = parseManifest(fs, root, w).getOrElse(EmptyManifest)
         val ownIdx = mw.buckets.map(_._2).filterNot(committedIdxShards.contains)
         val ownLines: Seq[(String, String)] =
-          if (mw.r == 0) mw.legacy
-          else ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
+          ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
             .map(l => { val p = parseIx(l, new Path(shardsDir(root), ix))
               (p.dk, p.shard) }))
         for ((dk, ds) <- ownLines
@@ -1029,12 +1049,8 @@ object ManifestStore {
         dk -> (kept ++ newFilesOf.getOrElse(dk, Seq.empty))
       }.toMap
       // dir-count bookkeeping WITHOUT flattening the index: the header
-      // carries the committed count; a pre-count manifest pays one full
-      // resolution and the count is written forward from here on
-      val curCount: Int =
-        if (!curM.exists) 0
-        else if (curM.r == 0 || curM.count < 0) curIndexFull.size
-        else curM.count
+      // carries the committed count
+      val curCount: Int = curM.count
       val dirWasThere: Map[String, Boolean] = changedDirs.map { dk =>
         dk -> (curM.exists && dirShardOf(fs, root, curM, dk).isDefined)
       }.toMap
@@ -1044,13 +1060,11 @@ object ManifestStore {
       val newR = math.max(math.max(curM.r, 1), targetBuckets(newCount))
       def idxShardName(b: Int): String =
         s"idx${b}_v${vNew}_${java.util.UUID.randomUUID().toString.take(8)}.list"
-      // index lines carry each dir's file count forward (−1 = unknown,
-      // a pre-v5 line carried through a growth step)
+      // index lines carry each dir's file count forward
       def writeIdxShard(b: Int, lines: Seq[IxLine]): String = {
         val s = idxShardName(b)
         writeLines(fs, new Path(shardsDir(root), s),
-          lines.sortBy(_.dk).map(l =>
-            if (l.n >= 0) s"${l.dk}\t${l.shard}\t${l.n}" else s"${l.dk}\t${l.shard}"))
+          lines.sortBy(_.dk).map(l => s"${l.dk}\t${l.shard}\t${l.n}"))
         s
       }
       // INDEX-LEVEL sharding: the manifest file is (bucket → index
@@ -1092,7 +1106,7 @@ object ManifestStore {
             }
           }
         } else {
-          // growth / first publish / legacy upgrade: one full re-bucket
+          // growth / first publish: one full re-bucket
           val changedSet = changedDirs.toSet
           val newIndex = scala.collection.mutable.LinkedHashMap[String, IxLine]()
           for (l <- curIndexFull if !changedSet(l.dk))
@@ -1159,8 +1173,7 @@ object ManifestStore {
         val curIdxNames: Set[String] = curM.buckets.map(_._2).toSet
         val ownIdx = mw.buckets.map(_._2).filterNot(curIdxNames.contains)
         val ownLines: Seq[(String, String)] =
-          if (mw.r == 0) mw.legacy
-          else ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
+          ownIdx.flatMap(ix => shardLinesLax(fs, root, ix)
             .map(l => { val p = parseIx(l, new Path(shardsDir(root), ix))
               (p.dk, p.shard) }))
         for ((dk, ds) <- ownLines) {

@@ -191,6 +191,24 @@ class ApiSpec extends SparkSpec {
     assert(plain.length > 2)
   }
 
+  test("sma and ema on a dotted SignalK path return the dot-free path's rows") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val (fromMs, toMs) = (1704412800000L, 1706140800000L)
+    val series = graft.api.ApiQueries.series(spark, sfDir)
+    // the same samples under a dotted path name
+    val dotted = series.withColumn("path",
+      when(col("path") === "click", lit("environment.wind.directionTrue"))
+        .otherwise(col("path")))
+    for (sm <- Seq("sma:5", "ema:0.3")) {
+      def rows(s: org.apache.spark.sql.DataFrame, path: String): Seq[Seq[Any]] =
+        History.values(s, "vessels.urn-3", Seq(PathSpec.parse(s"$path:max:$sm")),
+          fromMs, toMs, 21600000L).collect().map(_.toSeq).toSeq
+      val plain = rows(series, "click")
+      assert(plain.length > 2)
+      assert(rows(dotted, "environment.wind.directionTrue") == plain, sm)
+    }
+  }
+
   test("unknown smoothing and empty specs are rejected") {
     intercept[IllegalArgumentException](PathSpec.parse("p:average:loess:0.5"))
     intercept[IllegalArgumentException] {

@@ -156,6 +156,23 @@ class DegenerateInputSpec extends SparkSpec {
     assert(e.getMessage.contains("empty embedding corpus"))
   }
 
+  test("k-means E-step: a NaN cosine never wins the fold") {
+    graft.functions.DotProduct.register(spark)
+    def vecs(rows: (Long, Seq[Double])*) =
+      rows.toDF("vec_id", "v").withColumn("v", expr("graft_dense(v)"))
+        .withColumn("norm2", expr("graft_dot(v, v)"))
+    def step(e: org.apache.spark.sql.DataFrame, cents: (Long, Seq[Double])*) =
+      graft.similarity.Embeddings.kmeansEStep(e,
+        vecs(cents: _*).toDF("cid", "vc", "cnorm2")).collect()
+    val e = vecs((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 2.0)))
+    // centroid 0 has a non-finite component: its cosine with every
+    // vector is NaN, which Spark orders above every number
+    val got = step(e, (0L, Seq(Double.NaN, 0.0)), (1L, Seq(3.0, 0.0)), (2L, Seq(0.0, 1.0)))
+      .map(r => r.getAs[Long]("vec_id") -> (r.getAs[Long]("cid"), r.getAs[Double]("ccos")))
+      .toMap
+    assert(got == Map(1L -> (1L, 1.0), 2L -> (2L, 1.0)), got)
+  }
+
   test("kmv overlap: a single-source corpus yields zero pair rows, not an error") {
     val one = java.nio.file.Files.createTempDirectory("graft_degen_kmv").toString
     Tables.documents(spark, sfDir).where(col("source") === "src0")

@@ -606,6 +606,57 @@ class ManifestStoreSpec extends SparkSpec {
     assert(rows(root) == Set("[1,1.0,0]", "[2,2.0,1]"))
   }
 
+  test("an uncommitted manifest cut short mid-write (empty or truncated) cannot wedge the next publish or the sweep") {
+    // a publish killed between the manifest's create and close leaves
+    // an empty or truncated `_manifest_v{v+1}` with no marker: crash
+    // residue, not a foreign layout
+    val root = tmp()
+    ManifestStore.append(spark, root, "b", df((1L, 1.0, 0)))
+    val fs = graft.util.Fs.of(spark, root)
+    def residue(body: String): Path = {
+      val mp = new Path(root, s"_manifest_v${ManifestStore.committedVersion(fs, root) + 1}")
+      val out = fs.create(mp, true)
+      out.write(body.getBytes("UTF-8")); out.close()
+      ManifestStore.clearShardCache()
+      mp
+    }
+    var expect = Set("[1,1.0,0]")
+    for ((body, i) <- Seq("", "#R\t1", "#R\t1\t2\n0").zipWithIndex) {
+      val v = ManifestStore.committedVersion(fs, root)
+      residue(body)
+      ManifestStore.append(spark, root, "b", df((10L + i, 1.0, i)))
+      expect += s"[${10 + i},1.0,$i]"
+      assert(ManifestStore.committedVersion(fs, root) == v + 1, s"residue '$body'")
+      ManifestStore.clearShardCache()
+      assert(rows(root) == expect, s"residue '$body'")
+    }
+    // a real crashed publish whose manifest is then cut to 0 bytes: the
+    // next publish deletes it unread, the sweep collects its own shards
+    ManifestStore.crashPoint = Some("commit")
+    intercept[IllegalStateException] {
+      ManifestStore.append(spark, root, "b", df((9L, 9.0, 5)))
+    }
+    ManifestStore.crashPoint = None
+    val v = ManifestStore.committedVersion(fs, root)
+    residue("")
+    def b5Shards(): Int = fs.listStatus(new Path(root, "_shards"))
+      .count(_.getPath.getName.startsWith("b=5_"))
+    ManifestStore.append(spark, root, "b", df((20L, 2.0, 1)))
+    assert(ManifestStore.committedVersion(fs, root) == v + 1)
+    assert(b5Shards() == 1, "the crashed publish's own shard is left to the sweep")
+    expect += "[20,2.0,1]"
+    // the sweep runs over such a residue and does not let it protect
+    // anything: the crashed publish's stranded shard goes
+    residue("#R\t1")
+    ManifestStore.sweepStrandedShards(spark, root)
+    assert(b5Shards() == 0, "the sweep missed the crashed publish's shard")
+    ManifestStore.clearShardCache()
+    assert(rows(root) == expect, "the sweep deleted a referenced shard")
+    ManifestStore.append(spark, root, "b", df((30L, 3.0, 2)))
+    ManifestStore.clearShardCache()
+    assert(rows(root) == expect + "[30,3.0,2]")
+  }
+
   test("incremental compaction rewrites ONLY hot dirs: O(touched) data work + O(index buckets) metadata on a many-dir store; a compact store publishes nothing") {
     // r20 verdict item 2: compactOp was a whole-table replace — every
     // dir read and rewritten, and the O(store) stranded-shard sweep
@@ -654,30 +705,61 @@ class ManifestStoreSpec extends SparkSpec {
     // r20 verdict item 3: a 10⁶-dir cold reader funneled O(dirs) small
     // reads through one JVM's 16-thread pool. Above resolveJobThreshold
     // cache misses, the shard files are read by a Spark job instead —
-    // the reads scale with the cluster. Same contents either way.
+    // the reads scale with the cluster. Same contents either way, also
+    // for a root whose path holds a comma and a glob character.
+    for (root <- Seq(tmp(), tmp() + "/odd,root[1]")) {
+      ManifestStore.append(spark, root, "b",
+        df((0 until 96).map(i => (i.toLong, i.toDouble, i)): _*))
+      // serial (pool) resolution: threshold far above the store
+      val savedThr = ManifestStore.resolveJobThreshold
+      try {
+        ManifestStore.resolveJobThreshold = Int.MaxValue
+        ManifestStore.clearShardCache()
+        val jobsBefore = ManifestStore.resolveJobRuns.get()
+        val serialFiles = ManifestStore.files(spark, root)
+        val serialRows = rows(root)
+        assert(ManifestStore.resolveJobRuns.get() == jobsBefore,
+          "the small-store path paid a Spark job")
+        // job resolution: threshold below the store's shard count
+        ManifestStore.resolveJobThreshold = 8
+        ManifestStore.clearShardCache()
+        val readsBefore = ManifestStore.shardDiskReads.get()
+        val jobFiles = ManifestStore.files(spark, root)
+        // every one of the 96 dir shards was read (by the job's tasks)
+        assert(ManifestStore.shardDiskReads.get() - readsBefore >= 96)
+        assert(ManifestStore.resolveJobRuns.get() > jobsBefore,
+          "cold resolution above the threshold did not use the job path")
+        assert(jobFiles == serialFiles,
+          "job-path snapshot differs from the serial path")
+        assert(rows(root) == serialRows)
+      } finally ManifestStore.resolveJobThreshold = savedThr
+    }
+  }
+
+  test("a manifest without the current layout header is refused by read, publish and sweep; no shard is deleted") {
     val root = tmp()
-    ManifestStore.append(spark, root, "b",
-      df((0 until 96).map(i => (i.toLong, i.toDouble, i)): _*))
-    // serial (pool) resolution: threshold far above the store
-    val savedThr = ManifestStore.resolveJobThreshold
-    try {
-      ManifestStore.resolveJobThreshold = Int.MaxValue
-      ManifestStore.clearShardCache()
-      val jobsBefore = ManifestStore.resolveJobRuns.get()
-      val serialFiles = ManifestStore.files(spark, root)
-      val serialRows = rows(root)
-      assert(ManifestStore.resolveJobRuns.get() == jobsBefore,
-        "the small-store path paid a Spark job")
-      // job resolution: threshold below the store's shard count
-      ManifestStore.resolveJobThreshold = 8
-      ManifestStore.clearShardCache()
-      val jobFiles = ManifestStore.files(spark, root)
-      assert(ManifestStore.resolveJobRuns.get() > jobsBefore,
-        "cold resolution above the threshold did not use the job path")
-      assert(jobFiles == serialFiles,
-        "job-path snapshot differs from the serial path")
-      assert(rows(root) == serialRows)
-    } finally ManifestStore.resolveJobThreshold = savedThr
+    ManifestStore.append(spark, root, "b", df((1L, 1.0, 0), (2L, 2.0, 1)))
+    val fs = graft.util.Fs.of(spark, root)
+    val v = ManifestStore.committedVersion(fs, root)
+    // a single-level (dir → shard) manifest with no `#R` header
+    val dirLines = ManifestStore.shardIndex(spark, root).map { case (dk, s) => s"$dk\t$s" }
+    val mp = new Path(root, s"_manifest_v$v")
+    val out = fs.create(mp, true)
+    out.write(dirLines.mkString("\n").getBytes("UTF-8")); out.close()
+    ManifestStore.clearShardCache()
+    def shards(): Set[String] =
+      fs.listStatus(new Path(root, "_shards")).map(_.getPath.getName).toSet
+    val before = shards()
+    def refused(body: => Unit): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("unknown manifest layout"), e.getMessage)
+    }
+    refused(ManifestStore.read(spark, root, schema).collect())
+    refused(ManifestStore.append(spark, root, "b", df((3L, 3.0, 2))))
+    refused(ManifestStore.sweepStrandedShards(spark, root))
+    assert(shards() == before, "a refused store lost shards")
+    assert(ManifestStore.committedVersion(fs, root) == v)
+    assert(!fs.exists(new Path(root, "_lease")), "a refused publish kept the lease")
   }
 
   test("stranded shards: the per-trigger path never pays the O(store) sweep; sweepStrandedShards and growth publishes collect the residue") {

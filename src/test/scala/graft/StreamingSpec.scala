@@ -148,6 +148,48 @@ class StreamingSpec extends SparkSpec {
     assert(df.where(col("old_n").isNotNull).count() > 0)
   }
 
+  test("stream_tier_correction: a trigger that crashes before its commit leaves tier and CDC at the previous version; the rerun gives the one-shot answer") {
+    import graft.util.ManifestStore
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.DecimalType
+    val ev = Tables.events(spark, sfDir)
+    val isLate = col("event_id") % 17 === 3
+    val seed = graft.operators.TimeSeries.tierPartials(ev.where(!isLate), 3600000L)
+      .withColumn("value_sum", col("value_sum").cast(DecimalType(38, 6)))
+      .localCheckpoint()
+    val late = ev.where(isLate)
+    val batches = (0 until 3).map(i => late.where(pmod(col("event_id"), lit(3)) === i))
+    def fresh(): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_corr_crash").toString
+      ManifestStore.publishOps(spark, root, Seq(
+        ManifestStore.replaceTableOp("tier", "", () => seed)))
+      root
+    }
+    val keySchema = org.apache.spark.sql.types.StructType(
+      Seq("user_id", "event_type", "bucket_ms").map(seed.schema(_)))
+    def tier(root: String): Seq[String] = ManifestStore.readTable(spark, root, "tier", seed.schema)
+      .collect().map(_.mkString("|")).toSeq.sorted
+    def cdcKeys(root: String): Seq[String] = ManifestStore.readTable(spark, root, "cdc", keySchema)
+      .collect().map(_.mkString("|")).toSeq.sorted
+    val stepped = fresh()
+    Streaming.correctTier(spark, stepped, batches(0))
+    val (tier0, cdc0) = (tier(stepped), cdcKeys(stepped))
+    assert(cdc0.nonEmpty)
+    ManifestStore.crashPoint = Some("publish")
+    try intercept[IllegalStateException](Streaming.correctTier(spark, stepped, batches(1)))
+    finally ManifestStore.crashPoint = None
+    // neither table moved: no tier rewrite, no CDC rows for the failed batch
+    assert(tier(stepped) == tier0)
+    assert(cdcKeys(stepped) == cdc0)
+    // rerun the failed batch, then the rest
+    batches.drop(1).foreach(Streaming.correctTier(spark, stepped, _))
+    assert(cdcKeys(stepped).size > cdc0.size)
+    val oneShot = fresh()
+    Streaming.correctTier(spark, oneShot, late)
+    assert(tier(stepped) == tier(oneShot))
+    assert(cdcKeys(stepped).distinct == cdcKeys(oneShot))
+  }
+
   test("stream_episodes matches the batch operator's completed rows") {
     import org.apache.spark.sql.functions.col
     val streamed = Streaming.streamEpisodes(spark, sfDir)
